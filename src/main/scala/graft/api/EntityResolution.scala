@@ -2,11 +2,9 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim
 
 import graft.core.Cleaners
-import graft.expr.DukeScoreExpr
-import graft.expr.functions.clean_chain
+import graft.expr.functions.{clean_values, duke_score_cleaned}
 import graft.model.MatchConfig
 
 /** The reference plugin's query surface, Spark-native (SURVEY.md §3.1):
@@ -25,24 +23,24 @@ object EntityResolution {
 
   /** Add a `score` column: probability(candidate ≙ query record).
     *
-    * Scoring routes through the fused `DukeScoreExpr` kernel — the fold runs
-    * in Scala over evaluated child arrays, so the expression tree stays LINEAR
-    * in property count. (A Column-level Bayes fold embeds the accumulator ~5×
-    * per property: 5^P growth, Catalyst analysis blows up past ~8-10
-    * properties.) Query-side values are cleaned once on the driver with the
-    * same kernel chain; candidate-side values clean declaratively per row.
+    * Scoring routes through `duke_score_cleaned`, the production Duke kernel
+    * as one expression — the fold runs in Scala over evaluated child arrays,
+    * so the expression tree stays LINEAR in property count. (A Column-level
+    * Bayes fold embeds the accumulator ~5× per property: 5^P growth, Catalyst
+    * analysis blows up past ~8-10 properties.) Query-side values are cleaned
+    * once on the driver with the same kernel chain; candidate-side values
+    * clean declaratively per row.
     */
   def scored(
       candidates: DataFrame,
       query: Map[String, Seq[String]],
-      config: MatchConfig): DataFrame = {
-    val kids = config.properties.flatMap(propKids(candidates, query, _))
-    val scoreCol = graftshim.column(DukeScoreExpr(kids.map(graftshim.expression), config))
-    candidates.withColumn("score", scoreCol)
-  }
+      config: MatchConfig): DataFrame =
+    candidates.withColumn("score",
+      duke_score_cleaned(config, config.properties.flatMap(propKids(candidates, query, _))))
 
   /** (query values, candidate values) column pair for one property: query
-    * side cleaned once on the driver, candidate side declaratively per row.
+    * side cleaned once on the driver, candidate side declaratively per row
+    * (`clean_values`, the same leg `duke_score` runs).
     */
   private def propKids(
       candidates: DataFrame,
@@ -56,14 +54,8 @@ object EntityResolution {
     val qCol = if (qv.isEmpty) missing else array(qv.map(lit): _*)
     val cCol =
       if (!candidates.columns.contains(spec.name)) missing
-      else {
-        val raw = candidates.schema(spec.name).dataType.typeName match {
-          case "array" => col(spec.name)
-          case _       => array(col(spec.name))
-        }
-        filter(transform(raw, v => clean_chain(spec.cleaners, v)),
-          v => v.isNotNull && v =!= "")
-      }
+      else clean_values(spec.cleaners, col(spec.name),
+        multiValued = candidates.schema(spec.name).dataType.typeName == "array")
     Seq(qCol, cCol)
   }
 
@@ -71,7 +63,7 @@ object EntityResolution {
     * face: beside `score`, an `explain` map property -> probability factor.
     * A single-property Duke fold from the 0.5 prior returns exactly that
     * property's probability (bayes(0.5, p) = p), so each factor reuses the
-    * fused kernel verbatim; missing evidence reads 0.5 (Duke: no evidence
+    * kernel verbatim; missing evidence reads 0.5 (Duke: no evidence
     * moves nothing). Bayes-folding the factors in config order reproduces
     * `score` bit-for-bit (spec-asserted).
     */
@@ -80,9 +72,8 @@ object EntityResolution {
       query: Map[String, Seq[String]],
       config: MatchConfig): DataFrame = {
     val entries = config.properties.flatMap { spec =>
-      val kids = propKids(candidates, query, spec)
-      Seq(lit(spec.name), graftshim.column(
-        DukeScoreExpr(kids.map(graftshim.expression), config.copy(properties = Seq(spec)))))
+      Seq(lit(spec.name), duke_score_cleaned(
+        config.copy(properties = Seq(spec)), propKids(candidates, query, spec)))
     }
     scored(candidates, query, config).withColumn("explain", map(entries: _*))
   }

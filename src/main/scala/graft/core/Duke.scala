@@ -8,8 +8,13 @@ import graft.model.{EntityRecord, MatchConfig, PropertySpec}
   * candidate document (`[U EntityResolutionScript.java#runAsDouble]`,
   * `[D Processor.java#compare]`, `[D utils/Utils.java#computeBayes]`).
   *
-  * Pure JVM: the batched mapPartitions scorer, the Catalyst DukeScore expression
-  * and the golden tests all call these same functions.
+  * Pure JVM. Two folds share `bayes` and `propertyProbability`:
+  *  - `CompiledConfig.score` over Scala `Map`s is the naive REFERENCE fold. In
+  *    the engine only `Eval` (gold labels) calls it; tests compare against it.
+  *  - `DukeArrayKernel.score` over per-property value arrays is the PRODUCTION
+  *    kernel: the batched mapPartitions scorer (`ErPipeline.score`) and the
+  *    Catalyst `DukeScoreExpr` both run it. Parity with the reference is
+  *    asserted bit-for-bit by DukeScoreExprSpec.
   */
 object Duke {
 
@@ -118,4 +123,53 @@ object Duke {
   }
 
   def compile(config: MatchConfig): CompiledConfig = new CompiledConfig(config)
+}
+
+/** The production Duke fold: same math as `Duke.CompiledConfig.score`, over
+  * per-property cleaned-value arrays in config order. `vals(2i)` / `vals(2i+1)`
+  * are the a / b values of property i; a `null` array means the side is
+  * missing. Null and empty values are skipped before the max, exactly as the
+  * reference fold filters them.
+  */
+final class DukeArrayKernel(val config: MatchConfig) extends Serializable {
+
+  @transient private lazy val fns: Array[(String, String, Array[Double]) => Double] =
+    config.properties.map(p => Similarity.registry(p.comparator)).toArray
+  private val lows: Array[Double] = config.properties.map(_.low).toArray
+  private val highs: Array[Double] = config.properties.map(_.high).toArray
+  private val params: Array[Array[Double]] = config.properties.map(_.params.toArray).toArray
+  // id/ignore properties contribute no evidence (Duke Property flags)
+  private val evidence: Array[Boolean] = config.properties.map(_.isEvidence).toArray
+
+  def score(vals: Array[Array[String]]): Double = {
+    var acc = 0.5
+    var i = 0
+    while (i < lows.length) {
+      val a = vals(2 * i)
+      val b = vals(2 * i + 1)
+      if (evidence(i) && a != null && b != null) {
+        val fn = fns(i)
+        var best = Double.NegativeInfinity
+        var ai = 0
+        while (ai < a.length) {
+          val x = a(ai)
+          if (x != null && x.nonEmpty) {
+            var bi = 0
+            while (bi < b.length) {
+              val y = b(bi)
+              if (y != null && y.nonEmpty) {
+                val p = Duke.propertyProbability(fn(x, y, params(i)), lows(i), highs(i))
+                if (p > best) best = p
+              }
+              bi += 1
+            }
+          }
+          ai += 1
+        }
+        if (best > Double.NegativeInfinity) acc = Duke.bayes(acc, best)
+      }
+      i += 1
+    }
+    acc
+  }
 }

@@ -7,69 +7,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-import graft.core.{Duke, Similarity}
+import graft.core.DukeArrayKernel
 import graft.model.MatchConfig
 
-/** Scoring kernel over Catalyst array data — the fused-expression fast path
-  * (SURVEY.md §7.2 M5): per property a pair of `array<string>` children
-  * holding the already-cleaned values; missing-value skip, multi-value max,
-  * probability curve and Bayes fold identical to `Duke.CompiledConfig.score`
-  * (pinned by DukeScoreExprSpec parity tests). Avoids the row -> Scala-Map
-  * materialization the typed mapPartitions path pays per row.
-  */
-final class DukeArrayKernel(val config: MatchConfig) extends Serializable {
-
-  @transient private lazy val fns: Array[(String, String, Array[Double]) => Double] =
-    config.properties.map(p => Similarity.registry(p.comparator)).toArray
-  private val lows: Array[Double] = config.properties.map(_.low).toArray
-  private val highs: Array[Double] = config.properties.map(_.high).toArray
-  private val params: Array[Array[Double]] = config.properties.map(_.params.toArray).toArray
-  // id/ignore properties contribute no evidence (Duke Property flags)
-  private val evidence: Array[Boolean] = config.properties.map(_.isEvidence).toArray
-
-  /** arrs(2i) / arrs(2i+1) = sides of property i; null entry = missing side. */
-  def score(arrs: Array[ArrayData]): Double = {
-    var acc = 0.5
-    var i = 0
-    val n = lows.length
-    while (i < n) {
-      val a = arrs(2 * i)
-      val b = arrs(2 * i + 1)
-      if (evidence(i) && a != null && b != null && a.numElements() > 0 && b.numElements() > 0) {
-        val fn = fns(i)
-        val p = params(i)
-        var best = Double.NegativeInfinity
-        var ai = 0
-        while (ai < a.numElements()) {
-          if (!a.isNullAt(ai)) {
-            val av = a.getUTF8String(ai).toString
-            if (av.nonEmpty) {
-              var bi = 0
-              while (bi < b.numElements()) {
-                if (!b.isNullAt(bi)) {
-                  val bv = b.getUTF8String(bi).toString
-                  if (bv.nonEmpty) {
-                    val pr = Duke.propertyProbability(fn(av, bv, p), lows(i), highs(i))
-                    if (pr > best) best = pr
-                  }
-                }
-                bi += 1
-              }
-            }
-          }
-          ai += 1
-        }
-        if (best > Double.NegativeInfinity) acc = Duke.bayes(acc, best)
-      }
-      i += 1
-    }
-    acc
-  }
-}
-
-/** children = [a_p0, b_p0, a_p1, b_p1, ...] (array<string>, pre-cleaned).
+/** The production Duke kernel (`graft.core.DukeArrayKernel`) as a Catalyst
+  * expression. children = [a_p0, b_p0, a_p1, b_p1, ...] (array<string>,
+  * pre-cleaned); each child array is decoded to Scala strings once per row.
   * Null children mean "property missing on that side" (P3 skip), so the
-  * expression is null-TOLERANT and never returns null itself.
+  * expression is null-TOLERANT and never returns null itself. Built only by
+  * `functions.duke_score_cleaned`; the reference fold is
+  * `Duke.CompiledConfig.score`.
   */
 case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
     extends Expression {
@@ -83,15 +30,8 @@ case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
 
   @transient private lazy val kernel = new DukeArrayKernel(config)
 
-  override def eval(input: InternalRow): Any = {
-    val arrs = new Array[ArrayData](children.length)
-    var i = 0
-    while (i < children.length) {
-      arrs(i) = children(i).eval(input).asInstanceOf[ArrayData]
-      i += 1
-    }
-    kernel.score(arrs)
-  }
+  override def eval(input: InternalRow): Any =
+    kernel.score(DukeScoreExpr.decode(children.map(_.eval(input).asInstanceOf[ArrayData]).toArray))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val kernelRef = ctx.addReferenceObj("dukeKernel", kernel, classOf[DukeArrayKernel].getName)
@@ -108,11 +48,35 @@ case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
         |org.apache.spark.sql.catalyst.util.ArrayData[] $arrs =
         |  new org.apache.spark.sql.catalyst.util.ArrayData[${children.length}];
         |${evals.mkString("\n")}
-        |double ${ev.value} = $kernelRef.score($arrs);
+        |double ${ev.value} = $kernelRef.score(graft.expr.DukeScoreExpr.decode($arrs));
       """.stripMargin,
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): DukeScoreExpr = copy(children = newChildren)
+}
+
+object DukeScoreExpr {
+  /** Evaluated children -> the kernel's input: each array decoded to Scala
+    * strings once per row; a null child stays null (missing side).
+    */
+  def decode(arrs: Array[ArrayData]): Array[Array[String]] = {
+    val vals = new Array[Array[String]](arrs.length)
+    var i = 0
+    while (i < arrs.length) {
+      val d = arrs(i)
+      if (d != null) {
+        val v = new Array[String](d.numElements())
+        var j = 0
+        while (j < v.length) {
+          if (!d.isNullAt(j)) v(j) = d.getUTF8String(j).toString
+          j += 1
+        }
+        vals(i) = v
+      }
+      i += 1
+    }
+    vals
+  }
 }

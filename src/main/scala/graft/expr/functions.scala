@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.functions._
 
-import graft.model.{MatchConfig, PropertySpec}
+import graft.model.MatchConfig
 
 /** Column-level API over the custom expressions — the engine's `functions._`
   * (SURVEY.md §2.3/§2.4/§2.5). Everything composes as ordinary Columns, so
@@ -102,46 +102,41 @@ object functions {
   def bayes_combine(p: Column, q: Column): Column =
     p * q / (p * q + (lit(1.0) - p) * (lit(1.0) - q))
 
-  /** Per-property factor with missing-value skip (P3): null/empty on either side
-    * -> null (no evidence); the fold leaves the accumulator untouched on null.
+  /** One side of one property as the kernel wants it: raw values (a single
+    * string, or an array when `multiValued`) through the cleaner chain, null
+    * and empty values dropped (P3). A null array stays null (missing side).
     */
-  def duke_factor(spec: PropertySpec, a: Column, b: Column): Column = {
-    val ca = clean_chain(spec.cleaners, a)
-    val cb = clean_chain(spec.cleaners, b)
-    when(a.isNull || b.isNull || ca === "" || cb === "", lit(null).cast("double"))
-      .otherwise(duke_probability(sim(spec.comparator, ca, cb, spec.params), spec.low, spec.high))
+  def clean_values(cleaners: Seq[String], c: Column, multiValued: Boolean): Column = {
+    val raw = if (multiValued) c else array(c)
+    filter(transform(raw, v => clean_chain(cleaners, v)), v => v.isNotNull && v =!= "")
   }
 
-  /** Multi-valued property factor (A2): arrays on both sides, max probability over
-    * the value cross product, empties excluded before the max (SURVEY.md §7.4).
+  /** A4/§8.3: full record score over PRE-CLEANED sides — `sides` =
+    * [a_p0, b_p0, a_p1, b_p1, ...] `array<string>` columns in config order,
+    * null for a missing side. One `DukeScoreExpr` running the production
+    * kernel, so the expression tree stays linear in property count.
     */
-  def duke_factor_multi(spec: PropertySpec, a: Column, b: Column): Column = {
-    val ca = filter(transform(a, v => clean_chain(spec.cleaners, v)),
-      v => v.isNotNull && v =!= "")
-    val cb = filter(transform(b, v => clean_chain(spec.cleaners, v)),
-      v => v.isNotNull && v =!= "")
-    val probs = flatten(transform(ca, v1 => transform(cb, v2 =>
-      duke_probability(sim(spec.comparator, v1, v2, spec.params), spec.low, spec.high))))
-    when(a.isNull || b.isNull || size(ca) === 0 || size(cb) === 0,
-      lit(null).cast("double"))
-      .otherwise(array_max(probs))
-  }
+  def duke_score_cleaned(config: MatchConfig, sides: Seq[Column]): Column =
+    col2(DukeScoreExpr(sides.map(x), config))
 
-  /** A4/§8.3: full record score as one Column tree. `sides(name)` yields the
-    * (left, right) columns for a property; `multiValued` marks array columns.
-    * Fold from prior 0.5 in fixed property order (deterministic).
+  /** A4/§8.3: full record score over RAW values. `sides(name)` yields the
+    * (left, right) columns for an evidence property; `multiValued` marks
+    * array columns. Each side runs `clean_values`, then `duke_score_cleaned`.
     */
   def duke_score(
       config: MatchConfig,
       sides: String => (Column, Column),
-      multiValued: Set[String] = Set.empty): Column =
-    config.properties.filter(_.isEvidence).foldLeft(lit(0.5)) { (acc, spec) =>
-      val (a, b) = sides(spec.name)
-      val f =
-        if (multiValued(spec.name)) duke_factor_multi(spec, a, b)
-        else duke_factor(spec, a, b)
-      when(f.isNull, acc).otherwise(bayes_combine(acc, f))
-    }
+      multiValued: Set[String] = Set.empty): Column = {
+    val missing = lit(null).cast("array<string>")
+    duke_score_cleaned(config, config.properties.flatMap { spec =>
+      if (!spec.isEvidence) Seq(missing, missing)
+      else {
+        val (a, b) = sides(spec.name)
+        val m = multiValued(spec.name)
+        Seq(clean_values(spec.cleaners, a, m), clean_values(spec.cleaners, b, m))
+      }
+    })
+  }
 
   /** Register the SQL surface (`sim_*`, `clean_*`, phonetic codes) so
     * `spark.sql` queries reach the same expressions (SURVEY.md §2.10).

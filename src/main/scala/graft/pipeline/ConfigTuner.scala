@@ -12,7 +12,7 @@ import graft.model.{MatchConfig, PropertySpec}
   *
   * The distributed shape is the point: Duke evaluates candidate configs one
   * at a time over the whole test set; here ONE Spark job evaluates the WHOLE
-  * generation — every candidate contributes one fused `DukeScoreExpr` column
+  * generation — every candidate contributes one `duke_score_cleaned` column
   * over the pinned (labeled pair × records) join, and a single aggregate row
   * returns tp/fp/fn for all of them. A generation costs one pass over the
   * pairs regardless of population size, so population width is free
@@ -45,7 +45,6 @@ object ConfigTuner {
       comparatorPool: Map[String, Seq[String]] = Map.empty): TuneResult = {
     val spark = records.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graftshim
 
     require(populationSize >= 4 && elite >= 1 && elite < populationSize)
     val rnd = new scala.util.Random(seed)
@@ -62,11 +61,8 @@ object ConfigTuner {
       "ConfigTuner needs a non-empty evaluation set: every labeled (a_id, b_id) " +
         "pair must join `records` on BOTH ids — got zero joined pairs")
 
-    def scoreCol(cfg: MatchConfig) = {
-      val kids = cfg.properties.flatMap(p =>
-        Seq(col("a_props").getItem(p.name), col("b_props").getItem(p.name)))
-      graftshim.column(graft.expr.DukeScoreExpr(kids.map(graftshim.expression), cfg))
-    }
+    def scoreCol(cfg: MatchConfig) = graft.expr.functions.duke_score_cleaned(cfg,
+      cfg.properties.flatMap(p => Seq(col("a_props")(p.name), col("b_props")(p.name))))
 
     /** One Spark job: tp/fp/fn for every candidate in the generation. */
     def evaluate(pop: Seq[MatchConfig]): Seq[Candidate] = {

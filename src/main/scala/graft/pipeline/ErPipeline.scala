@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Cleaners, Duke, Phonetics}
+import graft.core.DukeArrayKernel
 import graft.model.{Doc, MatchConfig}
 
 /** The distributed re-expression of the reference's retrieve->score->decide
@@ -304,10 +304,11 @@ object ErPipeline {
   // ------------------------------------------------------------------ scoring
 
   /** Batched pairwise scoring in mapPartitions (mandated by BASELINE.json:6):
-    * the compiled config (cleaner chains + comparator dispatch resolved once)
-    * scores a whole partition's pairs in a tight JVM loop — the distributed
-    * analog of `EntityResolutionScript.runAsDouble` over an ES shard's
-    * candidate iterator (SURVEY.md §3.1).
+    * the production Duke kernel (`DukeArrayKernel`, comparator dispatch
+    * resolved once) scores a whole partition's pairs in a tight JVM loop —
+    * the distributed analog of `EntityResolutionScript.runAsDouble` over an
+    * ES shard's candidate iterator (SURVEY.md §3.1). Bit-identical to the
+    * reference fold `Duke.CompiledConfig.score` (DukeScoreExprSpec).
     *
     * Joins pair ids back to records on doc_id (two shuffle hash joins; records
     * are pre-cleaned so no string work happens here).
@@ -323,6 +324,11 @@ object ErPipeline {
     * corpus). When the b-side is a `doc_id`-bucketed table the b-join is
     * exchange-free on the corpus side — only the (small) pair ids shuffle,
     * the corpus never moves (BucketedCorpusSpec asserts the plan).
+    *
+    * The join projects the kernel's input directly: one array of per-property
+    * value arrays, a and b sides interleaved in config order (a property
+    * missing from a record's map projects null), so no per-row Scala `Map`
+    * is built.
     */
   def score(
       pairIds: Dataset[PairIds],
@@ -331,44 +337,18 @@ object ErPipeline {
       config: MatchConfig): Dataset[ScoredPair] = {
     val spark = pairIds.sparkSession
     import spark.implicits._
-    val cc = Duke.compile(config)
+    val kernel = new DukeArrayKernel(config)
 
     val a = aRecords.toDF("a_id", "a_props")
     val b = bRecords.toDF("b_id", "b_props")
+    val sides = config.properties.flatMap(p => Seq($"a_props"(p.name), $"b_props"(p.name)))
     val joined = pairIds.join(a, "a_id").join(b, "b_id")
-      .select($"a_id", $"b_id", $"block_key", $"a_props", $"b_props")
-      .as[(String, String, String, Map[String, Seq[String]], Map[String, Seq[String]])]
+      .select($"a_id", $"b_id", $"block_key", array(sides: _*))
+      .as[(String, String, String, Array[Array[String]])]
 
     joined.mapPartitions { it =>
-      it.map { case (aId, bId, key, ap, bp) =>
-        ScoredPair(aId, bId, key, cc.score(ap, bp))
-      }
+      it.map { case (aId, bId, key, vals) => ScoredPair(aId, bId, key, kernel.score(vals)) }
     }
-  }
-
-  /** Fused-expression scoring path (SURVEY.md M5): the whole clean-values ->
-    * probability -> Bayes fold runs inside one codegen'd Catalyst expression
-    * over the joined rows' array columns — no per-row Scala Map
-    * materialization. Value-identical to `score` (parity-tested); kept as the
-    * fast alternative beside the mandated mapPartitions path.
-    */
-  def scoreFused(
-      pairIds: Dataset[PairIds],
-      records: Dataset[CleanRecord],
-      config: MatchConfig): Dataset[ScoredPair] = {
-    val spark = pairIds.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.graftshim
-
-    val a = records.toDF("a_id", "a_props")
-    val b = records.toDF("b_id", "b_props")
-    val kids = config.properties.flatMap(p =>
-      Seq(col("a_props").getItem(p.name), col("b_props").getItem(p.name)))
-    val scoreCol = graftshim.column(
-      graft.expr.DukeScoreExpr(kids.map(graftshim.expression), config))
-    pairIds.toDF().join(a, "a_id").join(b, "b_id")
-      .select($"a_id", $"b_id", $"block_key", scoreCol.as("score"))
-      .as[ScoredPair]
   }
 
   /** Threshold classification (P4): match / maybe buckets. */

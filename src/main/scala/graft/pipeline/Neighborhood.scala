@@ -82,6 +82,7 @@ object Neighborhood {
   def pairs(df: DataFrame, key: Column, id: Column, w: Int, partitions: Int = 32): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
     import org.apache.spark.sql.graftshim
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
@@ -89,8 +90,12 @@ object Neighborhood {
     val spark = ranked.sparkSession
     val idType = ranked.schema("__id").dataType
     // scan rows are reused buffers; buffered values must be copied out
+    // (strings and complex ids are views into the buffer)
     def copyVal(v: Any): Any = v match {
       case u: UTF8String => u.copy()
+      case a: ArrayData => a.copy()
+      case r: InternalRow => r.copy()
+      case m: MapData => m.copy()
       case x => x
     }
 

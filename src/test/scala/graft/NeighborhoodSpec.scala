@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,12 +85,20 @@ class NeighborhoodSpec extends SparkSpec {
     val r = new scala.util.Random(59)
     val rows = (1 to 300).map(i => (f"d$i%04d", s"key${r.nextInt(25)}%02d"))
     val df = rows.toDF("id", "k").repartition(9)
-    val got = Neighborhood.pairs(df, col("k"), col("id"), w = 3, partitions = 5)
-      .collect().map(x => (x.getString(0), x.getString(1))).toSet
     val sorted = rows.sortBy { case (id, k) => (k, id) }.map(_._1)
     val want = (for {
       i <- sorted.indices; j <- (i + 1) to math.min(i + 3, sorted.size - 1)
     } yield (sorted(i), sorted(j))).toSet
-    assert(got === want)
+    // string ids, plus array- and struct-typed ids (same order): complex ids
+    // are views into the reused scan buffer and must be copied when buffered
+    val ids = Seq[(Column, Any => String)](
+      col("id") -> (_.asInstanceOf[String]),
+      array(col("id")) -> (_.asInstanceOf[scala.collection.Seq[String]].head),
+      struct(col("id")) -> (_.asInstanceOf[Row].getString(0)))
+    for ((idCol, unwrap) <- ids) {
+      val got = Neighborhood.pairs(df, col("k"), idCol, w = 3, partitions = 5)
+        .collect().map(x => (unwrap(x.get(0)), unwrap(x.get(1)))).toSet
+      assert(got === want, s"id column $idCol")
+    }
   }
 }

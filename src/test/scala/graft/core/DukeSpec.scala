@@ -3,7 +3,10 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{EntityRecord, MatchConfig, PropertySpec}
 
-/** The Duke probability model (SURVEY.md §8) — golden + algebraic tests. */
+/** The Duke probability model — parity contract tests (SURVEY.md §8):
+  * probability curve A1, bayes A3, multi-value max A2, missing-value skip P3,
+  * deterministic fold §8.3, config JSON parsing §1.2 — golden + algebraic.
+  */
 class DukeSpec extends AnyFunSuite {
   private val eps = 1e-12
 
@@ -11,6 +14,9 @@ class DukeSpec extends AnyFunSuite {
     assert(math.abs(Duke.bayes(0.5, 0.9) - 0.9) < eps) // 0.5 prior is neutral
     assert(math.abs(Duke.bayes(0.9, 0.9) - 0.81 / (0.81 + 0.01)) < eps)
     assert(math.abs(Duke.bayes(0.9, 0.1) - 0.5) < eps) // opposite evidence cancels
+    assert(math.abs(Duke.bayes(0.8, 0.8) - 0.64 / (0.64 + 0.04)) < eps)
+    assert(Duke.bayes(0.5, 0.7) === 0.7)            // 0.5 is the neutral prior
+    assert(Duke.bayes(0.7, 0.5) === 0.7)
   }
 
   test("bayes is commutative and monotone") {
@@ -28,12 +34,30 @@ class DukeSpec extends AnyFunSuite {
       assert(Duke.bayes(a, 0.7) >= a - eps)
       assert(Duke.bayes(a, 0.3) <= a + eps)
     }
+    val r = new scala.util.Random(5)
+    for (_ <- 1 to 1000) {
+      val a = 0.01 + r.nextDouble() * 0.98
+      val b = 0.01 + r.nextDouble() * 0.98
+      assert(math.abs(Duke.bayes(a, b) - Duke.bayes(b, a)) < eps)
+      // evidence > 0.5 raises, < 0.5 lowers
+      if (b > 0.5) assert(Duke.bayes(a, b) > a - eps)
+      if (b < 0.5) assert(Duke.bayes(a, b) < a + eps)
+      // associativity within fp tolerance
+      val c = 0.01 + r.nextDouble() * 0.98
+      assert(math.abs(
+        Duke.bayes(Duke.bayes(a, b), c) - Duke.bayes(a, Duke.bayes(b, c))) < 1e-9)
+    }
   }
 
   test("propertyProbability curve (A1)") {
     assert(Duke.propertyProbability(0.4, low = 0.1, high = 0.95) == 0.1)
     assert(math.abs(Duke.propertyProbability(1.0, 0.1, 0.95) - 0.95) < eps)
     assert(math.abs(Duke.propertyProbability(0.5, 0.1, 0.95) - ((0.95 - 0.5) * 0.25 + 0.5)) < eps)
+    assert(Duke.propertyProbability(1.0, 0.1, 0.95) === 0.95)
+    assert(Duke.propertyProbability(0.49999, 0.1, 0.95) === 0.1)
+    assert(Duke.propertyProbability(0.5, 0.1, 0.95) === (0.95 - 0.5) * 0.25 + 0.5)
+    assert(Duke.propertyProbability(0.8, 0.2, 0.9) === (0.9 - 0.5) * 0.64 + 0.5)
+    // continuity gap at 0.5 is intentional (Duke semantics): curve(0.5) != low
   }
 
   test("record score: exact duplicate scores near 1, unrelated scores low") {
@@ -54,6 +78,34 @@ class DukeSpec extends AnyFunSuite {
     assert(non < 0.3, s"non=$non")
     assert(cc.classify(dup) == "match")
     assert(cc.classify(non) == "no-match")
+  }
+
+  test("§8.3 record score: fold from 0.5 prior in fixed property order") {
+    val config = MatchConfig(0.85, 0.7, Seq(
+      PropertySpec("name", Seq("lowercase-normalize"), "jaro-winkler", 0.1, 0.95),
+      PropertySpec("phone", Seq("digits-only"), "exact", 0.05, 0.98)))
+    val cc = Duke.compile(config)
+    val a = cc.clean(EntityRecord("a", Map(
+      "name" -> Seq("John Smith"), "phone" -> Seq("(555) 123-4567"))))
+    val b = cc.clean(EntityRecord("b", Map(
+      "name" -> Seq("Jon Smith"), "phone" -> Seq("5551234567"))))
+    val simName = Similarity.jaroWinkler("john smith", "jon smith")
+    val pName = Duke.propertyProbability(simName, 0.1, 0.95)
+    val expected = Duke.bayes(Duke.bayes(0.5, pName), 0.98)
+    assert(math.abs(cc.score(a.props, b.props) - expected) < eps)
+
+    // missing property on one side: only the other factor applies
+    val c = cc.clean(EntityRecord("c", Map("name" -> Seq("John Smith"))))
+    val expected2 = Duke.bayes(0.5, Duke.propertyProbability(
+      Similarity.jaroWinkler("john smith", "jon smith"), 0.1, 0.95))
+    assert(math.abs(cc.score(c.props, b.props) - expected2) < eps)
+
+    // no shared evidence at all -> prior 0.5 -> "maybe"/below
+    val d = cc.clean(EntityRecord("d", Map.empty))
+    assert(cc.score(d.props, b.props) === 0.5)
+    assert(cc.classify(0.5) === "no-match")
+    assert(cc.classify(0.7) === "maybe")
+    assert(cc.classify(0.86) === "match")
   }
 
   test("missing values are skipped, not scored (P3/A2 interaction)") {
@@ -79,6 +131,22 @@ class DukeSpec extends AnyFunSuite {
     assert(math.abs(cc.score(a.props, b.props) - expected) < eps)
   }
 
+  test("A2 multi-value max + P3 missing-value skip") {
+    val spec = PropertySpec("name", Nil, "exact", 0.1, 0.9)
+    val fn = Similarity.registry("exact")
+    // best pair wins
+    val f = Duke.propertyFactor(Seq("a", "b"), Seq("x", "b"), spec, fn, Array.empty)
+    assert(f === Some(0.9))
+    // all-mismatch -> low
+    assert(Duke.propertyFactor(Seq("a"), Seq("x"), spec, fn, Array.empty) === Some(0.1))
+    // empty side -> None (no evidence, the fold must not move)
+    assert(Duke.propertyFactor(Nil, Seq("x"), spec, fn, Array.empty) === None)
+    // empty-after-cleaning values excluded BEFORE the max (§7.4 parity pitfall)
+    assert(Duke.propertyFactor(Seq("", "a"), Seq("a"), spec, fn, Array.empty) === Some(0.9))
+    assert(Duke.propertyFactor(Seq(""), Seq("a"), spec, fn, Array.empty) === None)
+    assert(Duke.propertyFactor(Seq(null, "a"), Seq("a"), spec, fn, Array.empty) === Some(0.9))
+  }
+
   test("config JSON round-trip (plugin-style params — SURVEY.md §1.2)") {
     val json =
       """{ "threshold": 0.85, "maybeThreshold": 0.7,
@@ -94,5 +162,121 @@ class DukeSpec extends AnyFunSuite {
     assert(cfg.properties.map(_.name) == Seq("name", "phone"))
     assert(cfg.properties.head.comparator.endsWith("JaroWinkler"))
     assert(cfg.properties(1).params == Seq(2.0))
+    val fixtureJson =
+      """{ "threshold": 0.85, "maybeThreshold": 0.7,
+        |  "properties": [
+        |    {"name": "name", "cleaners": ["trim", "lowercase-normalize"],
+        |     "comparator": "jaro-winkler", "low": 0.1, "high": 0.95},
+        |    {"name": "address", "cleaners": ["trim", "lowercase-normalize"],
+        |     "comparator": "qgram", "low": 0.2, "high": 0.9, "params": [3, 1]},
+        |    {"name": "phone", "cleaners": ["digits-only"],
+        |     "comparator": "exact", "low": 0.05, "high": 0.98},
+        |    {"name": "media", "cleaners": [],
+        |     "comparator": "exact", "low": 0.15, "high": 0.9}
+        |  ] }""".stripMargin
+    assert(MatchConfig.fromJson(fixtureJson) === MatchConfig.fixture)
+    // duke class names accepted end-to-end
+    val j2 = """{"threshold": 0.8, "maybeThreshold": 0.6, "properties": [
+      |{"name": "n", "cleaners": ["no.priv.garshol.duke.cleaners.TrimCleaner"],
+      | "comparator": "no.priv.garshol.duke.comparators.JaroWinkler",
+      | "low": 0.1, "high": 0.9}]}""".stripMargin
+    val cfg2 = MatchConfig.fromJson(j2)
+    val cc2 = Duke.compile(cfg2)
+    val s = cc2.score(
+      Map("n" -> Seq(" MARTHA ")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) },
+      Map("n" -> Seq("MARHTA")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) })
+    assert(s > 0.5)
+  }
+
+  test("identifier mismatch drags the score down (low << 0.5)") {
+    val config = MatchConfig.fixture
+    val cc = Duke.compile(config)
+    val same = Map("name" -> Seq("john smith"), "phone" -> Seq("55512345"))
+    val other = Map("name" -> Seq("john smith"), "phone" -> Seq("55599999"))
+    val withMatch = cc.score(same, same)
+    val withMismatch = cc.score(same, other)
+    assert(withMatch > 0.99)
+    assert(withMismatch < config.threshold) // phone mismatch kills it
+  }
+
+  test("score is symmetric and deterministic") {
+    val cc = Duke.compile(MatchConfig.fixture)
+    val r = new scala.util.Random(17)
+    def rec(): Map[String, Seq[String]] = Map(
+      "name" -> Seq.fill(1 + r.nextInt(2))(s"n${r.nextInt(20)} x${r.nextInt(9)}"),
+      "address" -> Seq(s"${r.nextInt(100)} main street city${r.nextInt(5)}"),
+      "phone" -> (if (r.nextBoolean()) Seq(s"555${r.nextInt(100000)}") else Nil),
+      "media" -> Seq.fill(r.nextInt(3))(s"m://x/${r.nextInt(50)}"))
+    for (_ <- 1 to 300) {
+      val (a, b) = (rec(), rec())
+      val s1 = cc.score(a, b)
+      val s2 = cc.score(b, a)
+      assert(math.abs(s1 - s2) < 1e-9)
+      assert(s1 >= 0.0 && s1 <= 1.0)
+      assert(cc.score(a, b) === s1)
+    }
+  }
+
+  test("parameterized cleaners (C8/C9) round-trip through plugin-style JSON") {
+    val json =
+      """{ "threshold": 0.8, "maybeThreshold": 0.6, "properties": [
+        |  {"name": "zip",
+        |   "cleaners": [{"name": "no.priv.garshol.duke.cleaners.RegexpCleaner",
+        |                 "pattern": "([0-9]{4})", "group": 1}],
+        |   "comparator": "exact", "low": 0.2, "high": 0.9},
+        |  {"name": "city",
+        |   "cleaners": ["lowercase-normalize",
+        |                {"name": "mapping", "map": {"oslo": "0sl0"}}],
+        |   "comparator": "exact", "low": 0.2, "high": 0.9}
+        |] }""".stripMargin
+    val cfg = MatchConfig.fromJson(json)
+    assert(cfg.properties(0).cleaners === Seq("regexp(([0-9]{4}),1)"))
+    assert(cfg.properties(1).cleaners === Seq("lowercase-normalize", "mapping(oslo=0sl0)"))
+    // parameterless cleaners in OBJECT form keep their name verbatim
+    val cfg2 = MatchConfig.fromJson(
+      """{"threshold": 0.8, "maybeThreshold": 0.6, "properties": [
+        |  {"name": "p", "comparator": "exact", "low": 0.2, "high": 0.9,
+        |   "cleaners": [{"name": "no.priv.garshol.duke.cleaners.DigitsOnlyCleaner"},
+        |                {"name": "trim"}]}]}""".stripMargin)
+    assert(cfg2.properties(0).cleaners ===
+      Seq("no.priv.garshol.duke.cleaners.DigitsOnlyCleaner", "trim"))
+    assert(Duke.compile(cfg2).properties(0).cleanedValues(Seq("a1b2 ")) === Seq("12"))
+    val cc = Duke.compile(cfg)
+    assert(cc.properties(0).cleanedValues(Seq("N-0371 Oslo")) === Seq("0371"))
+    assert(cc.properties(0).cleanedValues(Seq("no digits here")) === Nil) // P3: no evidence
+    assert(cc.properties(1).cleanedValues(Seq(" OSLO ")) === Seq("0sl0"))
+    // a matching zip on both sides is evidence; a no-match zip is skipped
+    val hi = cc.score(Map("zip" -> Seq("0371")), Map("zip" -> Seq("0371")))
+    assert(hi > 0.5)
+    assert(cc.score(Map("zip" -> Nil), Map("zip" -> Seq("0371"))) === 0.5)
+  }
+
+  test("idProperty / ignoreProperty are never evidence; lookup drives blocking") {
+    val json =
+      """{ "threshold": 0.8, "maybeThreshold": 0.6, "properties": [
+        |  {"name": "id", "idProperty": true},
+        |  {"name": "note", "ignoreProperty": true, "comparator": "exact",
+        |   "low": 0.01, "high": 0.99},
+        |  {"name": "name", "cleaners": ["lowercase-normalize"],
+        |   "comparator": "jaro-winkler", "low": 0.1, "high": 0.95, "lookup": "required"},
+        |  {"name": "phone", "cleaners": ["digits-only"],
+        |   "comparator": "exact", "low": 0.05, "high": 0.98, "lookup": "false"}
+        |] }""".stripMargin
+    val cfg = MatchConfig.fromJson(json)
+    assert(cfg.properties(0).idProperty && !cfg.properties(0).isEvidence)
+    assert(cfg.properties(1).ignoreProperty && !cfg.properties(1).isEvidence)
+    val cc = Duke.compile(cfg)
+    // identical id + identical ignored note contribute NOTHING; different
+    // names dominate — with flags honored the score has no id/note terms
+    val a = Map("id" -> Seq("r1"), "note" -> Seq("same"), "name" -> Seq("alice"))
+    val b = Map("id" -> Seq("r1"), "note" -> Seq("same"), "name" -> Seq("bob"))
+    val withFlags = cc.score(a, b)
+    val nameOnly = cc.score(Map("name" -> Seq("alice")), Map("name" -> Seq("bob")))
+    assert(withFlags === nameOnly)
+    // lookup=required blocks on name values; lookup=false/id excluded
+    val keyers = graft.pipeline.Blocking.fromConfig(cfg)
+    val rec = graft.pipeline.ErPipeline.CleanRecord("d1",
+      Map("id" -> Seq("r1"), "name" -> Seq("alice"), "phone" -> Seq("5551234")))
+    assert(graft.pipeline.Blocking.keys(keyers)(rec) === Seq("name:alice"))
   }
 }
