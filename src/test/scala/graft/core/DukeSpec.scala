@@ -14,9 +14,6 @@ class DukeSpec extends AnyFunSuite {
     assert(math.abs(Duke.bayes(0.5, 0.9) - 0.9) < eps) // 0.5 prior is neutral
     assert(math.abs(Duke.bayes(0.9, 0.9) - 0.81 / (0.81 + 0.01)) < eps)
     assert(math.abs(Duke.bayes(0.9, 0.1) - 0.5) < eps) // opposite evidence cancels
-    assert(math.abs(Duke.bayes(0.8, 0.8) - 0.64 / (0.64 + 0.04)) < eps)
-    assert(Duke.bayes(0.5, 0.7) === 0.7)            // 0.5 is the neutral prior
-    assert(Duke.bayes(0.7, 0.5) === 0.7)
   }
 
   test("bayes is commutative and monotone") {
@@ -34,6 +31,18 @@ class DukeSpec extends AnyFunSuite {
       assert(Duke.bayes(a, 0.7) >= a - eps)
       assert(Duke.bayes(a, 0.3) <= a + eps)
     }
+  }
+
+  test("propertyProbability curve (A1)") {
+    assert(Duke.propertyProbability(0.4, low = 0.1, high = 0.95) == 0.1)
+    assert(math.abs(Duke.propertyProbability(1.0, 0.1, 0.95) - 0.95) < eps)
+    assert(math.abs(Duke.propertyProbability(0.5, 0.1, 0.95) - ((0.95 - 0.5) * 0.25 + 0.5)) < eps)
+  }
+
+  test("bayes: formula, commutativity, 0.5 identity, monotonicity") {
+    assert(math.abs(Duke.bayes(0.8, 0.8) - 0.64 / (0.64 + 0.04)) < eps)
+    assert(Duke.bayes(0.5, 0.7) === 0.7)            // 0.5 is the neutral prior
+    assert(Duke.bayes(0.7, 0.5) === 0.7)
     val r = new scala.util.Random(5)
     for (_ <- 1 to 1000) {
       val a = 0.01 + r.nextDouble() * 0.98
@@ -49,15 +58,39 @@ class DukeSpec extends AnyFunSuite {
     }
   }
 
-  test("propertyProbability curve (A1)") {
-    assert(Duke.propertyProbability(0.4, low = 0.1, high = 0.95) == 0.1)
-    assert(math.abs(Duke.propertyProbability(1.0, 0.1, 0.95) - 0.95) < eps)
-    assert(math.abs(Duke.propertyProbability(0.5, 0.1, 0.95) - ((0.95 - 0.5) * 0.25 + 0.5)) < eps)
+  test("A1 probability curve: sim>=0.5 -> (high-0.5)sim²+0.5, else low") {
     assert(Duke.propertyProbability(1.0, 0.1, 0.95) === 0.95)
     assert(Duke.propertyProbability(0.49999, 0.1, 0.95) === 0.1)
     assert(Duke.propertyProbability(0.5, 0.1, 0.95) === (0.95 - 0.5) * 0.25 + 0.5)
     assert(Duke.propertyProbability(0.8, 0.2, 0.9) === (0.9 - 0.5) * 0.64 + 0.5)
     // continuity gap at 0.5 is intentional (Duke semantics): curve(0.5) != low
+  }
+
+  test("config JSON parsing mirrors the plugin query params (SURVEY.md §1.2)") {
+    val json =
+      """{ "threshold": 0.85, "maybeThreshold": 0.7,
+        |  "properties": [
+        |    {"name": "name", "cleaners": ["trim", "lowercase-normalize"],
+        |     "comparator": "jaro-winkler", "low": 0.1, "high": 0.95},
+        |    {"name": "address", "cleaners": ["trim", "lowercase-normalize"],
+        |     "comparator": "qgram", "low": 0.2, "high": 0.9, "params": [3, 1]},
+        |    {"name": "phone", "cleaners": ["digits-only"],
+        |     "comparator": "exact", "low": 0.05, "high": 0.98},
+        |    {"name": "media", "cleaners": [],
+        |     "comparator": "exact", "low": 0.15, "high": 0.9}
+        |  ] }""".stripMargin
+    assert(MatchConfig.fromJson(json) === MatchConfig.fixture)
+    // duke class names accepted end-to-end
+    val j2 = """{"threshold": 0.8, "maybeThreshold": 0.6, "properties": [
+      |{"name": "n", "cleaners": ["no.priv.garshol.duke.cleaners.TrimCleaner"],
+      | "comparator": "no.priv.garshol.duke.comparators.JaroWinkler",
+      | "low": 0.1, "high": 0.9}]}""".stripMargin
+    val cfg2 = MatchConfig.fromJson(j2)
+    val cc2 = Duke.compile(cfg2)
+    val s = cc2.score(
+      Map("n" -> Seq(" MARTHA ")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) },
+      Map("n" -> Seq("MARHTA")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) })
+    assert(s > 0.5)
   }
 
   test("record score: exact duplicate scores near 1, unrelated scores low") {
@@ -162,30 +195,6 @@ class DukeSpec extends AnyFunSuite {
     assert(cfg.properties.map(_.name) == Seq("name", "phone"))
     assert(cfg.properties.head.comparator.endsWith("JaroWinkler"))
     assert(cfg.properties(1).params == Seq(2.0))
-    val fixtureJson =
-      """{ "threshold": 0.85, "maybeThreshold": 0.7,
-        |  "properties": [
-        |    {"name": "name", "cleaners": ["trim", "lowercase-normalize"],
-        |     "comparator": "jaro-winkler", "low": 0.1, "high": 0.95},
-        |    {"name": "address", "cleaners": ["trim", "lowercase-normalize"],
-        |     "comparator": "qgram", "low": 0.2, "high": 0.9, "params": [3, 1]},
-        |    {"name": "phone", "cleaners": ["digits-only"],
-        |     "comparator": "exact", "low": 0.05, "high": 0.98},
-        |    {"name": "media", "cleaners": [],
-        |     "comparator": "exact", "low": 0.15, "high": 0.9}
-        |  ] }""".stripMargin
-    assert(MatchConfig.fromJson(fixtureJson) === MatchConfig.fixture)
-    // duke class names accepted end-to-end
-    val j2 = """{"threshold": 0.8, "maybeThreshold": 0.6, "properties": [
-      |{"name": "n", "cleaners": ["no.priv.garshol.duke.cleaners.TrimCleaner"],
-      | "comparator": "no.priv.garshol.duke.comparators.JaroWinkler",
-      | "low": 0.1, "high": 0.9}]}""".stripMargin
-    val cfg2 = MatchConfig.fromJson(j2)
-    val cc2 = Duke.compile(cfg2)
-    val s = cc2.score(
-      Map("n" -> Seq(" MARTHA ")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) },
-      Map("n" -> Seq("MARHTA")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) })
-    assert(s > 0.5)
   }
 
   test("identifier mismatch drags the score down (low << 0.5)") {
