@@ -7,41 +7,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.model.{Doc, MatchConfig}
 import graft.pipeline.ErPipeline
 
-/** Structured-Streaming re-expression of the reference's incremental behavior
-  * (SURVEY.md §2.9): ES scores at query time — index a doc, the next query sees
-  * it; Duke's incremental dedup is repeated `Processor.deduplicate(batch)`
-  * against a growing Database. Here:
-  *
-  *  - `dedupStream`: stateful exact-dedup keyed on content fingerprint via
-  *    `flatMapGroupsWithState` (first-seen vs duplicate decisions, the
-  *    KeyValueGroupedDataset custom-state path);
-  *  - `linkStream`: micro-batch incremental record linkage via `foreachBatch` —
-  *    each batch extracts + blocks the new docs, scores them against the
-  *    accumulated corpus (new-vs-all + new-vs-new), and appends match edges;
-  *    the corpus itself grows by the batch (Duke's Database.index analog).
-  */
-/** Per-micro-batch metrics row, shared by both streaming jobs (the streaming
-  * twin of the batch jobs' metrics stage). Each batch OVERWRITES its own
-  * `batch_id=<k>` partition dir, so foreachBatch's at-least-once replay
-  * rewrites the same row instead of appending a duplicate — the same
-  * idempotence discipline as `LabelCommit`. Read the parent dir to get
-  * (docs, edges, ts, batch_id) with batch_id inferred from the layout.
-  * One tiny dir per batch is the floor for per-batch observability; the
-  * growth is on the METRICS read path only (never the hot path), and a
-  * long-lived stream can aggregate old rows offline if the listing ever
-  * matters.
-  */
-private[streaming] object BatchMetrics {
-  def write(spark: SparkSession, dir: String, batchId: Long,
-      docs: Long, edges: Long): Unit = {
-    import spark.implicits._
-    Seq((docs, edges, System.currentTimeMillis()))
-      .toDF("docs", "edges", "ts")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/batch_id=$batchId")
-  }
-}
-
 /** Trickle-batch probe pruning: when a micro-batch touches few distinct
   * block keys, append a semantically-REDUNDANT `key IN (...)` filter to the
   * accumulated corpus-blocks read. The downstream equi-join on `key` already
@@ -222,6 +187,20 @@ private[streaming] object LabelCommit {
   }
 }
 
+/** Structured-Streaming re-expression of the reference's incremental behavior
+  * (SURVEY.md §2.9): ES scores at query time — index a doc, the next query sees
+  * it; Duke's incremental dedup is repeated `Processor.deduplicate(batch)`
+  * against a growing Database. Here:
+  *
+  *  - `dedupStream`: stateful exact-dedup keyed on content fingerprint via
+  *    `flatMapGroupsWithState` (first-seen vs duplicate decisions, the
+  *    KeyValueGroupedDataset custom-state path);
+  *  - `linkStream`: micro-batch incremental record linkage on
+  *    [[MicroBatchDriver]] — each batch extracts + blocks the new docs,
+  *    scores them against the accumulated corpus (new-vs-all + new-vs-new),
+  *    and appends match edges; the corpus itself grows by the batch (Duke's
+  *    Database.index analog).
+  */
 object IncrementalLink {
 
   case class DedupDecision(doc_id: String, fingerprint: Long, duplicate_of: Option[String])
@@ -305,16 +284,18 @@ object IncrementalLink {
         col("window.end").as("window_end"), col("bucket"), col("n"))
 
   /** Incremental linkage: every micro-batch links its docs against the corpus
-    * accumulated so far (parquet-backed, the Duke Database analog) and appends
-    * edges. Returns the started query; caller owns lifecycle.
+    * accumulated so far (the Duke Database analog) and appends edges. Returns
+    * the started query; caller owns lifecycle.
     *
     * Scale shape: only the NEW docs are extracted and blocked each batch; a
     * persistent blocks table stands in for the inverted index, so per-batch
     * work is new-vs-new (triangular self-join) + new-vs-corpus (A-vs-B
     * linkPairs against stored blocks) — never a re-block or re-scan of the
-    * whole corpus' pair space.
-    */
-  /** @param clustersDir when set, a complete (doc_id, cluster_id) labeling is
+    * whole corpus' pair space. The corpus is `records` (catalog table
+    * `corpusTable`, doc_id-bucketed) and `blocks` (`corpusTable_blocks`,
+    * key-bucketed) under `corpusDir`; see [[MicroBatchDriver]].
+    *
+    * @param clustersDir when set, a complete (doc_id, cluster_id) labeling is
     *                     maintained under this path across micro-batches via
     *                     `Cluster.mergeDelta` — each batch's match edges fold
     *                     into the existing labels at DELTA cost (contracted
@@ -356,159 +337,28 @@ object IncrementalLink {
       onBatchComplete: Long => Unit = _ => ()): StreamingQuery = {
     val spark = stream.sparkSession
     import spark.implicits._
-
-    // Read-gate catalog state cached across micro-batches (VERDICT r5 #2 —
-    // the per-trigger driver floor): ensureBatchTable's reconcile costs a
-    // SHOW PARTITIONS collect + a listStatus EVERY batch, yet this stream is
-    // the table's only writer — once the gate has reconciled/recreated the
-    // entry in this JVM it stays valid for the stream's lifetime. The cache
-    // lives in the foreachBatch closure, so a restart (fresh closure, the
-    // cross-JVM-maintenance window) re-runs the full gate; stale state that
-    // could only arise from a concurrent external writer (disallowed by the
-    // compaction contract) fails loudly at the read instead of silently.
-    val gateSeen = scala.collection.mutable.Set[String]()
-    def gated(key: String)(check: => Boolean): Boolean =
-      gateSeen.contains(key) || { val ok = check; if (ok) gateSeen += key; ok }
-
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Doc], batchId: Long) =>
-        // lazy pin: the emptiness-gate count right below materializes it
-        val newRecords = graft.io.Persist.pinLazy(
-          ErPipeline.extract(batch, config).toDF()).as[ErPipeline.CleanRecord]
-        // ONE count over the pinned batch (cached-block scan) doubles as the
-        // emptiness gate and the metrics doc count (VERDICT r5 #2: the
-        // isEmpty probe + a separate metrics count were two driver actions)
-        val nDocs = newRecords.toDF().count()
-        if (nDocs > 0) {
-          // blocking scheme = the config's lookup flags, SAME as batch
-          // LinkJob stage ② (ADVICE r3: a lookup-flagged config must stream
-          // the same candidate set it links in batch)
-          val keyers = graft.pipeline.Blocking.fromConfig(config)
-          // lazy pin: materialized by the pair generation's skew-stats job
-          val newBlocks = graft.io.Persist.pinLazy(
-            ErPipeline.block(newRecords, keyers).toDF()).as[ErPipeline.BlockRow]
-          val recordsDir = s"$corpusDir/records"
-          val blocksDir = s"$corpusDir/blocks"
-          // ensureBatchTable, not tableExists: the catalog is per-JVM, so a
-          // restart in a fresh JVM must rebuild the entries from the on-disk
-          // layout rather than score against a falsely "empty" corpus
-          val hasCorpus = corpusTable match {
-            case Some(tn) =>
-              gated(tn)(graft.io.Tables.ensureBatchTable(spark, tn, recordsDir, "doc_id", nBuckets)) &&
-                gated(tn + "_blocks")(graft.io.Tables.ensureBatchTable(spark, tn + "_blocks", blocksDir, "key", nBuckets))
-            case None =>
-              // BOTH dirs must have a committed batch: a crash between the
-              // records write and the blocks write would otherwise leave
-              // hasCorpus true with the blocks read below failing forever
-              gated(recordsDir)(graft.io.EdgeLog.hasData(spark, recordsDir)) &&
-                gated(blocksDir)(graft.io.EdgeLog.hasData(spark, blocksDir))
-          }
-          // the accumulated corpus records: scoring's b-side. Every corpus
-          // read prunes to `batch_id < batchId` — previous batches only,
-          // which both matches the old append semantics AND excludes the
-          // batch's own rows on an at-least-once replay (scoring a replayed
-          // doc against itself would fabricate self-pairs). doc_id-bucketed
-          // when a table name is configured, so the score join leaves it in
-          // place (buckets span the batch partitions).
-          val corpusRecs: Option[Dataset[ErPipeline.CleanRecord]] =
-            if (!hasCorpus) None
-            else Some((corpusTable match {
-              case Some(tn) =>
-                // the catalog caches the relation's file listing across
-                // micro-batches; without a refresh the read misses the
-                // previous batch's append and its pairs silently drop at
-                // the inner props join
-                spark.catalog.refreshTable(tn)
-                spark.table(tn) // doc_id-bucketed: b-join is exchange-free
-              case None => spark.read.parquet(recordsDir)
-            }).where(col("batch_id") < batchId).drop("batch_id")
-              .as[ErPipeline.CleanRecord])
-
-          // new-vs-new pairs score against the (small, pinned) batch records;
-          // new-vs-old pairs score with the a-side = batch, b-side = corpus —
-          // the corpus is only ever the BUILD side of one join, never unioned
-          // into the probe (a union would both re-shuffle the corpus each
-          // micro-batch and discard its bucketed distribution)
-          val (nnPairs, _) = ErPipeline.pairs(newBlocks)
-          val scoredNew = ErPipeline.score(nnPairs, newRecords, config)
-          val scored = corpusRecs match {
-            case None => scoredNew
-            case Some(corpus) =>
-              val rawOldBlocks = (corpusTable match {
-                case Some(tn) =>
-                  // blocks bucketed on key: the per-batch linkPairs groupBy
-                  // and key-join read the corpus blocks pre-clustered
-                  spark.catalog.refreshTable(tn + "_blocks")
-                  spark.table(tn + "_blocks")
-                case None => spark.read.parquet(blocksDir)
-              }).where(col("batch_id") < batchId).drop("batch_id")
-              val keyHint = ProbePrune.keyList(newBlocks.toDF(), "key")
-              val oldBlocks = keyHint.fold(rawOldBlocks)(ks =>
-                rawOldBlocks.where(col("key").isin(ks: _*))).as[ErPipeline.BlockRow]
-              val (noPairs, _) = ErPipeline.linkPairs(newBlocks, oldBlocks)
-              // prune the score join's b-side the same way (VERDICT r5 #1 —
-              // the last O(accumulated-corpus) read in the loop): every
-              // candidate b_id is an old-block doc under one of the batch's
-              // keys, so a redundant `doc_id IN (...)` over the bounded
-              // old-block id set lets the doc_id-bucketed records table
-              // prune bucket files + row groups instead of scanning every
-              // accumulated record (and its fat props) per trigger. Only
-              // attempted when the BLOCKS probe pruned (a genuine trickle
-              // batch): with most buckets touched, the id set is unbounded
-              // and the full exchange-free scan is the better plan — the
-              // extra collect there was a measured per-batch regression.
-              val corpusB =
-                if (keyHint.isEmpty) corpus
-                else ProbePrune(corpus.toDF(), oldBlocks.toDF(), "doc_id")
-                  .as[ErPipeline.CleanRecord]
-              scoredNew.unionByName(
-                ErPipeline.score(noPairs, newRecords, corpusB, config))
-          }
-          // linkPairs keeps (new, old) orientation; normalize to (min, max)
-          // so streamed edges equal the batch pipeline's bit-for-bit
-          // lazy pin: the EdgeLog write right below materializes it; the
-          // label commit and the metrics count then read the pinned blocks
-          val batchEdges = graft.io.Persist.pinLazy(
-            ErPipeline.matchEdges(scored, config)
-              .select(least(col("a_id"), col("b_id")).as("a_id"),
-                greatest(col("a_id"), col("b_id")).as("b_id")))
-          // replay-idempotent: overwrites the batch's own partition dir
-          graft.io.EdgeLog.write(batchEdges, edgesDir, batchId)
-
-          // incremental transitive clusters: fold this batch's edges into the
-          // standing labels, rewriting only affected partitions (LabelCommit)
-          clustersDir.foreach { dir =>
-            LabelCommit.commit(spark, dir, nClusterBuckets, batchEdges,
-              newRecords.toDF().select(col("doc_id")), labelSnapshotsToKeep)
-          }
-
-          // per-batch metrics beside the corpus (north rule "metric'd");
-          // the doc count rides the emptiness gate above, the edge count is
-          // one cached-block scan of the pinned edges
-          BatchMetrics.write(spark, s"$corpusDir/metrics", batchId,
-            nDocs, batchEdges.count())
-          // grow the corpus + its blocks table (Database.index analog);
-          // bucketed-by-doc_id when a table name is configured, so every later
-          // batch's score join leaves the accumulated records in place. Each
-          // batch lands in its own batch_id partition, which a replay
-          // OVERWRITES instead of appending duplicate rows (VERDICT r4 #1)
-          corpusTable match {
-            case Some(tn) =>
-              graft.io.Tables.writeBatchBucketed(
-                newRecords.toDF(), tn, recordsDir, "doc_id", nBuckets, batchId)
-              graft.io.Tables.writeBatchBucketed(
-                newBlocks.toDF(), tn + "_blocks", blocksDir, "key", nBuckets, batchId)
-            case None =>
-              newRecords.toDF().write.mode("overwrite")
-                .parquet(s"$recordsDir/batch_id=$batchId")
-              newBlocks.toDF().write.mode("overwrite")
-                .parquet(s"$blocksDir/batch_id=$batchId")
-          }
-        }
-        onBatchComplete(batchId)
+    // blocking scheme = the config's lookup flags, SAME as batch LinkJob
+    // stage ② (ADVICE r3: a lookup-flagged config must stream the same
+    // candidate set it links in batch)
+    val keyers = graft.pipeline.Blocking.fromConfig(config)
+    MicroBatchDriver.start(stream, corpusDir, edgesDir, checkpointDir,
+      corpusTable, nBuckets, clustersDir, nClusterBuckets, labelSnapshotsToKeep,
+      onBatchComplete, payload = MicroBatchDriver.Part("records", ""),
+      blocks = MicroBatchDriver.Part("blocks", "_blocks"),
+      pairCfg = ErPipeline.PairConfig()) { batch =>
+      val newRecords = graft.io.Persist.pinLazy(
+        ErPipeline.extract(batch, config).toDF()).as[ErPipeline.CleanRecord]
+      new CorpusBatch {
+        val rows = newRecords.toDF()
+        // lazy pin: materialized by the pair generation's skew-stats job
+        def blocks() = graft.io.Persist.pinLazy(
+          ErPipeline.block(newRecords, keyers).toDF()).as[ErPipeline.BlockRow]
+        // matchEdges is a pure filter, so filtering each candidate set
+        // before the driver's union gives the edges of filtering the union
+        def verify(pairs: Dataset[ErPipeline.PairIds], bSide: DataFrame) =
+          ErPipeline.matchEdges(ErPipeline.score(pairs, newRecords,
+            bSide.as[ErPipeline.CleanRecord], config), config)
       }
-      .start()
+    }
   }
 }

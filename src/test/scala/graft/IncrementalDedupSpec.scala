@@ -35,7 +35,10 @@ class IncrementalDedupSpec extends SparkSpec {
     } yield (ia, ib)).toSet
   }
 
-  test("streamed near-dup edges over batches == batch pipeline's verified set") {
+  /** Three batches through `nearDupStream`, against the batch oracle; the
+    * corpus in catalog tables named after `corpusTable`, or plain parquet.
+    */
+  private def streamedEqualsBatch(corpusTable: Option[String]): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val baseDir = Files.createTempDirectory("graft-neardup-stream").toString
@@ -48,7 +51,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val q = IncrementalDedup.nearDupStream(
       mem.toDS().toDF("doc_id", "text"),
       s"$baseDir/corpus", s"$baseDir/edges", s"$baseDir/ckpt",
-      corpusTable = Some("graft_neardup_corpus"),
+      corpusTable = corpusTable,
       clustersDir = Some(s"$baseDir/clusters"))
     try {
       mem.addData(b1: _*); q.processAllAvailable()
@@ -63,9 +66,14 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(Set((1L, 2L), (1L, 3L), (2L, 3L), (1L, 10L), (1L, 11L), (10L, 11L))
         .subsetOf(streamed))
       assert(!streamed.exists(e => e._1 == 30L || e._2 == 30L || e._1 == 31L || e._2 == 31L))
-      // corpus tables are bucketed and grew with every batch
-      spark.catalog.refreshTable("graft_neardup_corpus_fps")
-      assert(spark.table("graft_neardup_corpus_fps").count() === 7L)
+      // the corpus fps (a bucketed table when named) grew with every batch
+      val fps = corpusTable match {
+        case Some(tn) =>
+          spark.catalog.refreshTable(s"${tn}_fps")
+          spark.table(s"${tn}_fps")
+        case None => spark.read.parquet(s"$baseDir/corpus/fps")
+      }
+      assert(fps.count() === 7L)
 
       // per-batch metrics landed beside the corpus: one row per batch, doc
       // counts summing to the corpus, edge counts summing to the edge set
@@ -91,9 +99,19 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(gotLabels.count { case (d, c) => d == c } === 3) // 1, 30, 31
     } finally {
       q.stop()
-      spark.sql("DROP TABLE IF EXISTS graft_neardup_corpus_bands")
-      spark.sql("DROP TABLE IF EXISTS graft_neardup_corpus_fps")
+      corpusTable.foreach { tn =>
+        spark.sql(s"DROP TABLE IF EXISTS ${tn}_bands")
+        spark.sql(s"DROP TABLE IF EXISTS ${tn}_fps")
+      }
     }
+  }
+
+  test("streamed near-dup edges over batches == batch pipeline's verified set") {
+    streamedEqualsBatch(Some("graft_neardup_corpus"))
+  }
+
+  test("streamed near-dup edges over batches == batch pipeline's verified set (parquet corpus)") {
+    streamedEqualsBatch(None)
   }
 
   test("streamed dup clusters == batch DedupJob decisions on the driver corpus") {
