@@ -124,12 +124,14 @@ object DedupJob {
           ($"doc_id" === coalesce($"cc", $"rep")).as("keep"))
     }
 
-    // summary metrics in TWO actions: docs/candidates/edges counts come from
-    // the manifest rows recorded when each stage landed (no re-count jobs),
-    // leaving one agg over `grouped` (exact groups) and one over `decisions`
-    // (kept/dropped/clusters) — at bench scale the driver-side action count
-    // is a fixed serial cost that caps scaling efficiency
-    val stageRows = m.completedRows
+    // summary metrics in TWO actions: docs/candidates/edges counts are read
+    // from the stage files' parquet footers on the driver (no count jobs;
+    // the same count source as LinkJob, and a stage served on resume counts
+    // its files, not its manifest line), leaving one agg over `grouped`
+    // (exact groups) and one over `decisions` (kept/dropped/clusters) — at
+    // bench scale the driver-side action count is a fixed serial cost that
+    // caps scaling efficiency
+    def stageRows(s: String): Long = StageManifest.fileRows(spark, s"$outDir/$s").map(_._2).sum
     val nGroups = grouped
       .agg(count(when($"doc_id" === $"rep", 1))).collect()(0).getLong(0)
     val d = decisions

@@ -15,8 +15,10 @@ import graft.pipeline.{Blocking, Cluster, ErPipeline, Fixtures}
   * Every stage lands as parquet under `outDir` and is recorded in the stage
   * manifest, so a killed run resumes mid-pipeline (including per-iteration CC
   * checkpoints) and produces byte-identical outputs (BASELINE north_rule).
-  * Lineage rows (stage, partition, row count) and stage metrics are persisted
-  * alongside the data (BASELINE.json:6).
+  * Lineage rows (stage, part file, row count) and stage metrics are persisted
+  * alongside the data (BASELINE.json:6). Each fresh stage costs only the
+  * Spark jobs of its write: row counts and lineage come from the parquet
+  * footers of the written part files (`StageManifest.fileRows`).
   */
 object LinkJob {
 
@@ -129,35 +131,30 @@ object LinkJob {
         .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))
     }
 
-    // ⑦ lineage: per written FILE row counts of every persisted stage. Each
-    //    writer task emits exactly one part file, so file-level counts ARE
-    //    writer-side provenance — reader-side spark_partition_id() would
-    //    reflect the re-read split, not the task that wrote the data.
-    val lineage = m.stage(spark, "lineage") {
-      Seq("records", "blocks", "pairs", "scored", "classified", "edges", "clusters")
-        .map { s =>
-          spark.read.parquet(s"$outDir/$s")
-            .groupBy(input_file_name().as("file"))
-            .agg(count("*").as("rows"))
-            .select(lit(s).as("stage"), $"file", $"rows")
-        }.reduce(_ union _)
-    }
+    // ⑦ lineage: per written FILE row counts of every persisted stage, read
+    //    on the driver from the parquet footers (no scan, no job; the file
+    //    strings are the ones input_file_name() reports). Empty part files
+    //    are left out, so an empty stage has no lineage rows. Also computed
+    //    on resume: counts of stages served from parquet come from their
+    //    files, never from manifest lines.
+    val lineageRows = Seq("records", "blocks", "pairs", "scored", "classified", "edges", "clusters")
+      .flatMap { s =>
+        StageManifest.fileRows(spark, s"$outDir/$s")
+          .collect { case (file, rows) if rows > 0 => (s, file, rows) }
+      }
+    m.stage(spark, "lineage") { lineageRows.toDF("stage", "file", "rows") }
+    val stageRows = lineageRows.groupMapReduce(_._1)(_._3)(_ + _).withDefaultValue(0L)
 
-    // summary counts in four actions, not seven: the lineage stage already
-    // holds exact per-stage row counts (sum of per-file rows), and the two
-    // classification buckets fuse into one aggregate — driver-side actions
-    // are a fixed serial cost on every run
-    // `lineage` is the persisted stage frame already in hand; an empty
-    // persisted stage contributes no lineage rows, so its count is 0
-    val stageRows = lineage
-      .groupBy($"stage").agg(sum($"rows").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
+    // summary: docs/records/blocks/pairs from the footers (`extract` is 1:1
+    // with an invariant that raises on violation, so docs == records), plus
+    // one fused aggregate for the two classification buckets and one
+    // distinct count — driver-side actions are a fixed serial cost on every
+    // run
     val cl = classified.agg(
       count(when($"bucket" === "match", 1)),
       count(when($"bucket" === "maybe", 1))).collect()(0)
     val counts = Map(
-      "docs" -> docs.count(),
+      "docs" -> stageRows("records"),
       "records" -> stageRows("records"),
       "blocks" -> stageRows("blocks"),
       "pairs" -> stageRows("pairs"),

@@ -67,6 +67,38 @@ class DedupJobSpec extends SparkSpec {
     assert(s.droppedPairsMass === 0.0)
   }
 
+  test("resume from copied stages with manifest rows of 0 equals the clean run") {
+    val d = docs(
+      1L -> base, 2L -> base, 3L -> base,
+      10L -> variant("aaa"), 11L -> variant("bbb"),
+      20L -> (base + " x1 x2"), 21L -> (base + " x1 x3"), 22L -> (base + " x4 x3"),
+      30L -> (1 to 20).map(i => s"other$i").mkString(" "))
+    val dirA = tmp("graft-dedup-a")
+    val dirB = tmp("graft-dedup-b")
+    val a = DedupJob.run(spark, d, dirA)
+    assert(a.droppedPairsMass === 0.0) // a served candidates stage reports 0.0
+
+    // simulate a killed run: copy the completed stages up to the edges into
+    // B, recorded with 0 rows — the summary counts must come from the files
+    val mB = new graft.io.StageManifest(dirB)
+    def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+      import java.nio.file._
+      Files.walk(src).forEach { p =>
+        val t = dst.resolve(src.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(t)
+        else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
+    Seq("grouped", "candidates", "edges").foreach { s =>
+      copyDir(java.nio.file.Paths.get(dirA, s), java.nio.file.Paths.get(dirB, s))
+      mB.record(s, java.nio.file.Paths.get(dirB, s).toString, 0)
+    }
+    val b = DedupJob.run(spark, d, dirB)
+    assert(a.docs === 9 && a.candidates > 0 && a.edges > 0)
+    assert(b === a, s"summaries differ: $a vs $b")
+    assert(decisionsOf(dirB) === decisionsOf(dirA))
+  }
+
   test("second run over a completed outDir is a pure no-op with equal summary") {
     val out = tmp("graft-dedup-resume")
     val d = docs(1L -> base, 2L -> base, 10L -> variant("zzz"),
